@@ -247,23 +247,25 @@ object SparkEntry {
   // catalog table: resolve once, scan per query.
   // Cached paths are immutable fixture files; a path rewritten mid-session
   // would serve the stale resolution (documented contract). Entries for
-  // STOPPED sessions are purged on every cache miss (r19, advice fix) so a
-  // long-lived multi-session host doesn't retain dead sessions' plans —
-  // misses happen ~10 times per new session, so the sweep is off the hot
-  // hit path.
+  // STOPPED sessions are purged on every cache miss so a long-lived
+  // multi-session host doesn't retain dead sessions' plans — misses happen
+  // ~10 times per new session, so the sweep is off the hot hit path. The
+  // sweep runs BEFORE computeIfAbsent: its mapping function must not
+  // modify the map (ConcurrentHashMap contract — a recursive update can
+  // deadlock or throw).
   private val tableCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.sql.functions.install(spark)
-    val df = tableCache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      { case (sess, p) =>
-        tableCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-        // cloned sessions share a live context, so isStopped can't see
-        // them die — a hard size bound caps retention either way (a full
-        // re-resolution costs one footer read per fixture, ~ms)
-        if (tableCache.size > 256) tableCache.clear()
-        sess.read.parquet(p)
-      })
+    val key = (spark, s"$dir/$name.parquet")
+    if (!tableCache.containsKey(key)) {
+      tableCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
+      // cloned sessions share a live context, so isStopped can't see
+      // them die — a hard size bound caps retention either way (a full
+      // re-resolution costs one footer read per fixture, ~ms)
+      if (tableCache.size > 256) tableCache.clear()
+    }
+    val df = tableCache.computeIfAbsent(key, { case (sess, p) => sess.read.parquet(p) })
     // The driver's testdata drops have shipped events.ts both as int64
     // nanos (read as long under nanosAsLong) and as a us-precision naive
     // timestamp (r10). Normalize to int64 ns-since-epoch so every temporal

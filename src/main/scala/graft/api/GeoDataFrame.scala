@@ -799,7 +799,7 @@ final case class GeoDataFrame(
     require(Set("inner", "left", "right").contains(how),
       s"unknown sjoin how '$how' (inner | left | right)")
 
-    val rowId = "_sjoin_row_id"
+    val rowId = freshCol("_sjoin_row_id", df.columns, right.df.columns)
     // The id-stamped side feeds TWO plan branches (the inner join and the
     // left-anti unmatched probe below), and monotonically_increasing_id is
     // nondeterministic across recomputation: a task retry or executor loss
@@ -807,29 +807,21 @@ final case class GeoDataFrame(
     // dropping or duplicating unmatched rows. localCheckpoint() pins the
     // stamped rows once so both branches read identical ids — same pinning
     // pattern as Dedup.simhashPairs.
-    val leftDf =
-      if (how == "left")
-        df.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
-      else df
+    def stamped(d: DataFrame): DataFrame =
+      d.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
+    val leftDf = if (how == "left") stamped(df) else df
     // disambiguate column names like geopandas' suffixing
-    val rightRenamed0 = right.df.columns.foldLeft(right.df) { (acc, c) =>
-      if (leftDf.columns.contains(c)) acc.withColumnRenamed(c, c + rsuffix) else acc
-    }
-    val rightRenamed =
-      if (how == "right")
-        rightRenamed0.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
-      else rightRenamed0
-    val rGeomName =
-      if (leftDf.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val (suffixed, rGeomName) = suffixRight(right, rsuffix)
+    val rightRenamed = if (how == "right") stamped(suffixed) else suffixed
     onAttribute.foreach { a =>
       require(df.columns.contains(a) && right.df.columns.contains(a),
         s"sjoin onAttribute '$a' must exist on both sides")
     }
     // right-side copies were just suffixed (every onAttribute column
-    // clashes by definition)
+    // clashes by definition), so both names resolve unambiguously on any
+    // joined frame — including the indexed path's collected right side
     def attrEq: Column = onAttribute
-      .map(a => leftDf(a) === rightRenamed(a + rsuffix))
+      .map(a => col(a) === col(a + rsuffix))
       .foldLeft(lit(true))(_ && _)
 
     def pred(l: Column, r: Column): Column = predicate match {
@@ -850,8 +842,8 @@ final case class GeoDataFrame(
     val inner = strategy match {
       case "broadcast" | "auto" if strategy == "broadcast" || rightIsSmall(right) =>
         if (indexedBroadcastEnabled)
-          indexedBroadcastInner(leftDf, rightRenamed, rGeomName, predicate,
-            distance, onAttribute, rsuffix)
+          indexedBroadcastInner(leftDf, rightRenamed, rGeomName, predicate, distance)
+            .filter(attrEq)
         else
           leftDf.join(broadcast(rightRenamed),
             pred(leftDf(geometryColumn), rightRenamed(rGeomName)) && attrEq, "inner")
@@ -925,39 +917,31 @@ final case class GeoDataFrame(
                 "splitting only the hottest; raise cellSize for this data")
             hot.take(maxHot).sorted
           }
-        val l = leftDf.withColumn("_cell", explode(cellsL))
-        val r = rightRenamed.withColumn("_cell", explode(cellsR))
-        val emit =
+        def emit(cell: Column): Column =
           if (oversized == "sentinel")
-            anchor === col("_cell") ||
-              col("_cell") === lit(graft.sql.GridIndex.OversizedLeftBucket) ||
-              col("_cell") === lit(graft.sql.GridIndex.OversizedRightBucket)
-          else anchor === col("_cell")
-        if (hotCells.isEmpty) {
-          l.join(r, Seq("_cell"), "inner")
-            // attribute equalities FIRST: Catalyst folds them into the join
-            // condition as extra hash keys beside the cell id, and the
-            // cheap comparison culls candidates before the geometry kernel
-            .filter(attrEq)
-            .filter(pred(col(geometryColumn), col(rGeomName)))
-            .filter(emit)
-            .drop("_cell")
-        } else {
-          // two-level plan: cold cells join at the coarse grid (hot cells
-          // filtered out of both exploded sides — a pair anchored in a hot
-          // cell can never satisfy `anchor === cell` here); hot cells
-          // re-grid at cellSize/hotCellSplit and join in a SEPARATE plan
-          // (separate key spaces, so coarse/fine id collisions cannot
-          // create phantom meetings). Exactly-once across the union by the
-          // per-level anchor argument (GridIndex.fineCellsWithinHot docs).
+            anchor === cell ||
+              cell === lit(graft.sql.GridIndex.OversizedLeftBucket) ||
+              cell === lit(graft.sql.GridIndex.OversizedRightBucket)
+          else anchor === cell
+        val exact = pred(col(geometryColumn), col(rGeomName))
+        val hotLit = typedlit(hotCells)
+        // attribute equalities FIRST: Catalyst folds them into the join
+        // condition as extra hash keys beside the cell id, and the cheap
+        // comparison culls candidates before the geometry kernel. With hot
+        // cells this is the two-level plan's COLD leg: hot cells are
+        // filtered out of both exploded sides — a pair anchored in a hot
+        // cell can never satisfy `anchor === cell` here.
+        val coarse = cellJoin(leftDf, cellsL, rightRenamed, cellsR,
+          if (hotCells.isEmpty) None else Some(c => !array_contains(hotLit, c)))(
+          c => Seq(attrEq, exact, emit(c)))
+        if (hotCells.isEmpty) coarse
+        else {
+          // two-level plan: hot cells re-grid at cellSize/hotCellSplit and
+          // join in a SEPARATE plan (separate key spaces, so coarse/fine id
+          // collisions cannot create phantom meetings). Exactly-once across
+          // the union by the per-level anchor argument
+          // (GridIndex.fineCellsWithinHot docs).
           val s = cellSize.get
-          val hotLit = typedlit(hotCells)
-          val notHot = !array_contains(hotLit, col("_cell"))
-          val cold = l.filter(notHot).join(r.filter(notHot), Seq("_cell"), "inner")
-            .filter(attrEq)
-            .filter(pred(col(geometryColumn), col(rGeomName)))
-            .filter(emit)
-            .drop("_cell")
           val padL = if (predicate == "dwithin") distance else 0.0
           val maxFine = lit(hotFineMaxCells)
           // single-pass kernels either way: sentinel discards the buffer
@@ -970,24 +954,18 @@ final case class GeoDataFrame(
             else
               st_gridCellsSizedFineHotCap(g, lit(s), lit(hotCellSplit),
                 lit(pad), hotLit, maxFine)
-          val fineL = leftDf.withColumn("_cell", explode(fineExplode(
-            leftDf(geometryColumn), padL)))
-          val fineR = rightRenamed.withColumn("_cell", explode(fineExplode(
-            rightRenamed(rGeomName), 0.0)))
-          val fineEmit = st_gridCellAnchorSizedFine(col(geometryColumn),
-            col(rGeomName), lit(s), lit(hotCellSplit), lit(padL)) === col("_cell")
-          val fine = fineL.join(fineR, Seq("_cell"), "inner")
-            .filter(attrEq)
-            .filter(pred(col(geometryColumn), col(rGeomName)))
-            .filter(fineEmit)
-            .drop("_cell")
-          val twoLevel = cold.unionByName(fine)
+          val fineAnchor = st_gridCellAnchorSizedFine(col(geometryColumn),
+            col(rGeomName), lit(s), lit(hotCellSplit), lit(padL))
+          val fine = cellJoin(leftDf, fineExplode(leftDf(geometryColumn), padL),
+            rightRenamed, fineExplode(rightRenamed(rGeomName), 0.0))(
+            c => Seq(attrEq, exact, fineAnchor === c))
+          val twoLevel = coarse.unionByName(fine)
           if (oversized != "sentinel") twoLevel
           else {
             // MEET leg: rows whose fine explode exceeds the budget emit
             // NOTHING in the fine leg; they pair here at the COARSE grid
             // instead, restricted to hot cells. Every row keeps its hot
-            // coarse cells (reusing the coarse explode), the (lov || rov)
+            // coarse cells (the coarse explode), the (lov || rov)
             // gate excludes normal-normal pairs (those met in the fine
             // leg), and `anchor === cell` keeps exactly the pairs whose
             // coarse anchor is hot — cold-anchored pairs already fired in
@@ -997,65 +975,20 @@ final case class GeoDataFrame(
               lit(hotCellSplit), lit(padL), hotLit, maxFine)
             val rov = st_fineHotOversized(col(rGeomName), lit(s),
               lit(hotCellSplit), lit(0.0), hotLit, maxFine)
-            val isHot = array_contains(hotLit, col("_cell"))
-            val meet = l.filter(isHot).join(r.filter(isHot), Seq("_cell"), "inner")
-              .filter(lov || rov)
-              .filter(attrEq)
-              .filter(pred(col(geometryColumn), col(rGeomName)))
-              .filter(anchor === col("_cell"))
-              .drop("_cell")
+            val meet = cellJoin(leftDf, cellsL, rightRenamed, cellsR,
+              Some(c => array_contains(hotLit, c)))(
+              c => Seq(lov || rov, attrEq, exact, anchor === c))
             twoLevel.unionByName(meet)
           }
         }
     }
     how match {
       case "inner" => inner
-      case "left" =>
-        val matched = inner.select(col(rowId)).distinct()
-        val unmatched = leftDf.join(matched, Seq(rowId), "left_anti")
-        val withNullRight = rightRenamed.schema.fields.foldLeft(unmatched)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        inner.unionByName(withNullRight.select(inner.columns.map(col).toIndexedSeq: _*))
-          .drop(rowId)
-      case "right" =>
-        val matched = inner.select(col(rowId)).distinct()
-        val unmatched = rightRenamed.join(matched, Seq(rowId), "left_anti")
-        val withNullLeft = leftDf.schema.fields.foldLeft(unmatched)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        inner.unionByName(withNullLeft.select(inner.columns.map(col).toIndexedSeq: _*))
-          .drop(rowId)
+      case "left"  => padUnmatched(inner, leftDf, rowId, distinctKeys = true).drop(rowId)
+      case "right" => padUnmatched(inner, rightRenamed, rowId, distinctKeys = true).drop(rowId)
     }
   }
 
-  /** Nearest-neighbor spatial join within a radius (geopandas
-    * `sjoin_nearest(max_distance=...)`; the surveyed dask-geopandas version
-    * has no distributed counterpart — this extends the reference surface
-    * with the operator its users fall back to geopandas for).
-    *
-    * `maxDistance` is required: an unbounded nearest search cannot be
-    * planned as one co-partitioned join at scale (it needs expanding-ring
-    * re-probes), and geopandas' own docs recommend `max_distance` for
-    * performance. Rows with no right neighbor within the radius drop out
-    * under `how="inner"` and come back null-padded (null right columns,
-    * null distance) under `how="left"`, matching geopandas. Ties — several
-    * right rows at exactly the minimum distance — are all kept, matching
-    * geopandas; `exclusive=true` drops right geometries equal to the left
-    * geometry (the self-join idiom, shapely `query_nearest(exclusive)`).
-    *
-    * Plan (100 TB shape): dwithin grid join on padded fixed-size cells
-    * (anchor-cell exactly-once emission, zero eager scans) -> RANK window
-    * partitioned by the left key keeps per-left minima. One grid equi-join
-    * + one hash exchange; WindowGroupLimit prefilters rank<=1 candidates
-    * below the exchange, so the shuffle carries near-minimal rows. Never
-    * all-pairs.
-    *
-    * `leftKey` MUST uniquely identify left rows (it is the index analog of
-    * geopandas' per-row semantics): duplicate key values would pool the
-    * candidate sets of distinct rows into one rank window and keep only
-    * the pooled minimum. Not `require`d — verifying uniqueness would cost
-    * a count-distinct pass over the left side; add a surrogate key
-    * (`monotonically_increasing_id`) when no natural unique key exists.
-    */
   /** Geodesic proximity join: pairs of POINT rows within `meters` great-
     * circle meters on lon/lat data (the haversine sphere behind
     * `st_distancesphere`, R = 6371008.8). This is the join every
@@ -1129,12 +1062,7 @@ final case class GeoDataFrame(
         else nL.toDouble * nR.toDouble
       (c, est)
     }
-    val rightRenamed = right.df.columns.foldLeft(right.df) { (acc, c) =>
-      if (df.columns.contains(c)) acc.withColumnRenamed(c, c + rsuffix) else acc
-    }
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val (rightRenamed, rGeomName) = suffixRight(right, rsuffix)
     def padOf(g: Column): Column = {
       val latWorst = least(lit(89.99),
         greatest(abs(st_ymin(g)), abs(st_ymax(g))) + lit(padLat))
@@ -1158,15 +1086,12 @@ final case class GeoDataFrame(
       if (pairsEst >= 8e6 && df.rdd.getNumPartitions < dp) df.repartition(dp)
       else df
     }
-    val l = leftBase.withColumn("_cell", explode(
-      st_gridCellsSizedPad(df(geometryColumn), lit(cell), padOf(df(geometryColumn)))))
-    val r = rightRenamed.withColumn("_cell", explode(
-      st_gridCellsSized(rightRenamed(rGeomName), lit(cell))))
-    val joined = l.join(r, Seq("_cell"), "inner")
-      .filter(st_dwithinSphere(col(geometryColumn), col(rGeomName), lit(meters)))
-      .filter(st_gridCellAnchorSizedPad(col(geometryColumn), col(rGeomName),
-        lit(cell), padOf(col(geometryColumn))) === col("_cell"))
-      .drop("_cell")
+    val joined = cellJoin(
+      leftBase, st_gridCellsSizedPad(df(geometryColumn), lit(cell), padOf(df(geometryColumn))),
+      rightRenamed, st_gridCellsSized(rightRenamed(rGeomName), lit(cell)))(c => Seq(
+      st_dwithinSphere(col(geometryColumn), col(rGeomName), lit(meters)),
+      st_gridCellAnchorSizedPad(col(geometryColumn), col(rGeomName),
+        lit(cell), padOf(col(geometryColumn))) === c))
     withCrsOf(GeoDataFrame(joined, geometryColumn))
   }
 
@@ -1191,30 +1116,42 @@ final case class GeoDataFrame(
     require(maxMeters > 0 && k >= 1, "sjoinNearestSphere: bad params")
     require(Set("inner", "left").contains(how),
       s"unknown sjoinNearestSphere how '$how' (inner | left)")
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val rGeomName = suffixRight(right, rsuffix)._2
     val cands = sjoinDwithinSphere(right, maxMeters, rsuffix = rsuffix).df
       .withColumn(distanceCol,
         st_distanceSphere(col(geometryColumn), col(rGeomName)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(leftKey)).orderBy(col(distanceCol))
-    val nearest = cands.withColumn("_rk", rank().over(w))
-      .filter(col("_rk") <= k).drop("_rk")
-    how match {
-      case "inner" => nearest
-      case "left" =>
-        // no distinct(): left_anti ignores probe-side key multiplicity
-        val unmatched = df.join(nearest.select(col(leftKey)),
-          Seq(leftKey), "left_anti")
-        val rightFields = nearest.schema.fields
-          .filter(f => !df.columns.contains(f.name))
-        val padded = rightFields.foldLeft(unmatched)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        nearest.unionByName(padded.select(nearest.columns.map(col).toIndexedSeq: _*))
-    }
+    nearestOf(cands, leftKey, distanceCol, k, how)
   }
 
+  /** Nearest-neighbor spatial join within a radius (geopandas
+    * `sjoin_nearest(max_distance=...)`; the surveyed dask-geopandas version
+    * has no distributed counterpart — this extends the reference surface
+    * with the operator its users fall back to geopandas for).
+    *
+    * `maxDistance` is required: an unbounded nearest search cannot be
+    * planned as one co-partitioned join at scale (it needs expanding-ring
+    * re-probes), and geopandas' own docs recommend `max_distance` for
+    * performance. Rows with no right neighbor within the radius drop out
+    * under `how="inner"` and come back null-padded (null right columns,
+    * null distance) under `how="left"`, matching geopandas. Ties — several
+    * right rows at exactly the minimum distance — are all kept, matching
+    * geopandas; `exclusive=true` drops right geometries equal to the left
+    * geometry (the self-join idiom, shapely `query_nearest(exclusive)`).
+    *
+    * Plan (100 TB shape): dwithin grid join on padded fixed-size cells
+    * (anchor-cell exactly-once emission, zero eager scans) -> RANK window
+    * partitioned by the left key keeps per-left minima. One grid equi-join
+    * + one hash exchange; WindowGroupLimit prefilters rank<=1 candidates
+    * below the exchange, so the shuffle carries near-minimal rows. Never
+    * all-pairs.
+    *
+    * `leftKey` MUST uniquely identify left rows (it is the index analog of
+    * geopandas' per-row semantics): duplicate key values would pool the
+    * candidate sets of distinct rows into one rank window and keep only
+    * the pooled minimum. Not `require`d — verifying uniqueness would cost
+    * a count-distinct pass over the left side; add a surrogate key
+    * (`monotonically_increasing_id`) when no natural unique key exists.
+    */
   def sjoinNearest(
       right: GeoDataFrame,
       leftKey: String,
@@ -1252,9 +1189,7 @@ final case class GeoDataFrame(
     require(k >= 1, "sjoinNearest requires k >= 1")
     require(Set("inner", "left").contains(how),
       s"unknown sjoinNearest how '$how' (inner | left)")
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val rGeomName = suffixRight(right, rsuffix)._2
     val cands0 = sjoin(right, predicate = "dwithin", strategy = "grid",
       cellSize = Some(cellSize), rsuffix = rsuffix, distance = maxDistance)
       .withColumn(distanceCol, st_distance(col(geometryColumn), col(rGeomName)))
@@ -1267,33 +1202,8 @@ final case class GeoDataFrame(
         cands0.filter(!(col(distanceCol) === 0.0 &&
           st_equals(col(geometryColumn), col(rGeomName))))
       else cands0
-    val rkCol = freshCol("_rk", cands.columns)
-    val candCol = freshCol("_cand_n", cands.columns, Seq(rkCol))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(leftKey)).orderBy(col(distanceCol))
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col(leftKey))
-    val nearest = cands.withColumn(rkCol, rank().over(w))
-      .withColumn(candCol, org.apache.spark.sql.functions.count(lit(1)).over(wAll))
-      .filter(col(rkCol) <= k).drop(rkCol)
-    val res = how match {
-      case "inner" => nearest
-      case "left" =>
-        // geopandas how="left": left rows with no neighbor in the radius
-        // come back with null right columns and null distance. leftKey is
-        // unique by this method's contract, so the unmatched probe is a
-        // deterministic key anti-join — no row-id stamping needed (unlike
-        // sjoin how=left, where rows carry no unique key). No distinct():
-        // left_anti ignores probe-side key multiplicity.
-        val unmatched = df.join(nearest.select(col(leftKey)),
-          Seq(leftKey), "left_anti")
-        val rightFields = nearest.schema.fields
-          .filter(f => !df.columns.contains(f.name) || f.name == leftKey)
-          .filterNot(_.name == leftKey)
-        val padded = rightFields.foldLeft(unmatched)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        nearest.unionByName(padded.select(nearest.columns.map(col).toIndexedSeq: _*))
-    }
-    (res, candCol)
+    val candCol = freshCol("_cand_n", cands.columns)
+    (nearestOf(cands, leftKey, distanceCol, k, how, Some(candCol)), candCol)
   }
 
   /** Unbounded nearest-neighbor join (geopandas `sjoin_nearest` WITHOUT
@@ -1437,12 +1347,7 @@ final case class GeoDataFrame(
       exclusive: Boolean): DataFrame = {
     require(Set("inner", "left").contains(how),
       s"unknown nearest-join how '$how' (inner | left)")
-    val rightRenamed = right.df.columns.foldLeft(right.df) { (acc, c) =>
-      if (df.columns.contains(c)) acc.withColumnRenamed(c, c + rsuffix) else acc
-    }
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val (rightRenamed, rGeomName) = suffixRight(right, rsuffix)
     val (bc, localRight, idxCol) = prepareBroadcastSide(rightRenamed, rGeomName)
     val probe = org.apache.spark.sql.GraftInterop.column(
       graft.sql.IndexedNearestProbe(
@@ -1471,9 +1376,16 @@ final case class GeoDataFrame(
     *    through unchanged), attributes = left's. Rows whose geometry is
     *    fully erased are DROPPED (geopandas overlay drops empty results);
     *    pass `dropEmpty = false` to keep them with empty geometries.
-    * `union`/`symmetric_difference` compose from these two (intersection
-    * rows + each side's difference rows) — deliberately not fused, the
-    * composition is three declarative plans Spark unions for free.
+    * `identity`/`union`/`symmetric_difference` compose from these two
+    * (intersection rows + each side's difference rows) — deliberately not
+    * fused, the composition is declarative plans Spark unions for free.
+    * The composed modes follow geopandas' attribute model — intersection
+    * pieces carry BOTH sides' columns, left-only pieces carry the right
+    * side's columns as null and vice versa
+    * (`unionByName(allowMissingColumns)`), one geometry column named after
+    * this frame's. `rightKey` (the right frame's row-identity column) is
+    * required for the modes that build right-side difference pieces
+    * (union / symmetric_difference).
     *
     * CONTRACT: `leftKey` must be unique per left row (like
     * [[sjoinNearest]]'s leftKey) — the difference branch unions the
@@ -1487,15 +1399,6 @@ final case class GeoDataFrame(
     * where the bounded cascaded `StUnionAgg` folds intersecting right
     * parts — never all rights, only the candidates. Geometry kernels are
     * narrow expressions either way.
-    */
-  /** df-level set overlay (geopandas `overlay`): `how` in intersection /
-    * difference / identity / union / symmetric_difference. The composed
-    * modes follow geopandas' attribute model — intersection pieces carry
-    * BOTH sides' columns, left-only pieces carry the right side's columns
-    * as null and vice versa (`unionByName(allowMissingColumns)`), one
-    * geometry column named after this frame's. `rightKey` (the right
-    * frame's row-identity column) is required for the modes that build
-    * right-side difference pieces (union / symmetric_difference).
     */
   def overlay(
       right: GeoDataFrame,
@@ -1511,9 +1414,7 @@ final case class GeoDataFrame(
       // row's geometry — two touching polygons produce a line piece that
       // geopandas discards
       keepGeomType: Boolean = true): DataFrame = {
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val rGeomName = suffixRight(right, rsuffix)._2
     lazy val cands = sjoin(right, predicate = "intersects", strategy = strategy,
       cellSize = cellSize, rsuffix = rsuffix)
     def interDf: DataFrame = {
@@ -1550,11 +1451,8 @@ final case class GeoDataFrame(
       val geomAligned =
         if (right.geometryColumn == geometryColumn) raw
         else raw.withColumnRenamed(right.geometryColumn, geometryColumn)
-      geomAligned.columns.foldLeft(geomAligned) { (acc, c) =>
-        if (c != geometryColumn && df.columns.contains(c))
-          acc.withColumnRenamed(c, c + rsuffix)
-        else acc
-      }
+      suffixRight(GeoDataFrame(geomAligned, geometryColumn), rsuffix,
+        df.columns.filterNot(_ == geometryColumn))._1
     }
     how match {
       case "intersection" => interDf
@@ -1707,23 +1605,19 @@ final case class GeoDataFrame(
     * returns matching build-row indices. The join finishes as an integer
     * BroadcastHashJoin against the collected rows: per probe row the cost is
     * one decode + an O(log M) tree walk + exact kernels on true candidates
-    * only. `onAttribute` equalities are checked on the joined candidates —
-    * the same refinement position as the nested-loop plan's join condition.
+    * only. The caller checks `onAttribute` equalities on the joined
+    * candidates — the same refinement position as the nested-loop plan's
+    * join condition.
     */
   private def indexedBroadcastInner(leftDf: DataFrame, rightRenamed: DataFrame,
-      rGeomName: String, predicate: String, distance: Double,
-      onAttribute: Seq[String], rsuffix: String): DataFrame = {
+      rGeomName: String, predicate: String, distance: Double): DataFrame = {
     val (bc, localRight, idxCol) = prepareBroadcastSide(rightRenamed, rGeomName)
     val probe = org.apache.spark.sql.GraftInterop.column(
       graft.sql.IndexedSjoinProbe(
         org.apache.spark.sql.GraftInterop.expression(leftDf(geometryColumn)),
         predicate, distance, bc))
-    val attrEqByName = onAttribute
-      .map(a => col(a) === col(a + rsuffix))
-      .foldLeft(lit(true))(_ && _)
     leftDf.withColumn(idxCol, explode(probe))
       .join(broadcast(localRight), Seq(idxCol), "inner")
-      .filter(attrEqByName)
       .drop(idxCol)
   }
 
@@ -1761,6 +1655,73 @@ final case class GeoDataFrame(
     val taken = schemas.flatten.toSet
     if (!taken.contains(base)) base
     else Iterator.from(1).map(base + _).find(n => !taken.contains(n)).get
+  }
+
+  /** geopandas-style suffixing: the right frame with every column that
+    * clashes with `leftCols` renamed to `name + rsuffix`, and the right
+    * geometry column's name after the renaming.
+    */
+  private def suffixRight(right: GeoDataFrame, rsuffix: String,
+      leftCols: Seq[String] = df.columns.toSeq): (DataFrame, String) = {
+    val renamed = right.df.columns.foldLeft(right.df) { (acc, c) =>
+      if (leftCols.contains(c)) acc.withColumnRenamed(c, c + rsuffix) else acc
+    }
+    val g = right.geometryColumn
+    (renamed, if (leftCols.contains(g)) g + rsuffix else g)
+  }
+
+  /** The grid join's exploded-cell equi-join, shared by every grid leg:
+    * explodes each side to its cell ids under one collision-free scratch
+    * column, keeps only exploded rows passing `keep` (hot/cold routing),
+    * equi-joins on the cell id, applies `refine`'s filters in order and
+    * drops the scratch column. Both callbacks receive the cell column,
+    * which the anchor-cell emit test compares against.
+    */
+  private def cellJoin(l: DataFrame, cellsL: Column, r: DataFrame, cellsR: Column,
+      keep: Option[Column => Column] = None)(refine: Column => Seq[Column]): DataFrame = {
+    val name = freshCol("_cell", l.columns, r.columns)
+    val cell = col(name)
+    def side(d: DataFrame, cells: Column): DataFrame = {
+      val exploded = d.withColumn(name, explode(cells))
+      keep.fold(exploded)(k => exploded.filter(k(cell)))
+    }
+    refine(cell).foldLeft(side(l, cellsL).join(side(r, cellsR), Seq(name), "inner"))(
+      _.filter(_)).drop(name)
+  }
+
+  /** The nearest finisher: keeps each `leftKey` group's candidates of
+    * `rank() <= k` by `distanceCol` (rank keeps every distance tie). With
+    * `candCol`, each kept row also carries its group's total candidate
+    * count there — the completeness witness of [[sjoinNearestExpanding]].
+    * `how="left"` (geopandas) brings back left rows without candidates
+    * with null right columns and null distance; `leftKey` is unique by the
+    * nearest joins' contract, so the unmatched probe is a deterministic key
+    * anti-join — no row-id stamping needed (unlike sjoin how=left).
+    */
+  private def nearestOf(cands: DataFrame, leftKey: String, distanceCol: String,
+      k: Int, how: String, candCol: Option[String] = None): DataFrame = {
+    val rkCol = freshCol("_rk", cands.columns, candCol.toSeq)
+    val byKey = org.apache.spark.sql.expressions.Window.partitionBy(col(leftKey))
+    val ranked = cands.withColumn(rkCol, rank().over(byKey.orderBy(col(distanceCol))))
+    val nearest = candCol.fold(ranked)(c =>
+      ranked.withColumn(c, org.apache.spark.sql.functions.count(lit(1)).over(byKey)))
+      .filter(col(rkCol) <= k).drop(rkCol)
+    if (how == "left") padUnmatched(nearest, df, leftKey, distinctKeys = false)
+    else nearest
+  }
+
+  /** Outer-join finish: rows of `side` whose `key` is absent from
+    * `matched` come back with every other column of `matched` null and are
+    * unioned onto it. `distinctKeys` dedups the matched key set before the
+    * left-anti probe — worth it where one key matches many rows.
+    */
+  private def padUnmatched(matched: DataFrame, side: DataFrame, key: String,
+      distinctKeys: Boolean): DataFrame = {
+    val keys = matched.select(col(key))
+    val unmatched = side.join(if (distinctKeys) keys.distinct() else keys, Seq(key), "left_anti")
+    val padded = matched.schema.fields.filterNot(f => side.columns.contains(f.name))
+      .foldLeft(unmatched)((acc, f) => acc.withColumn(f.name, lit(null).cast(f.dataType)))
+    matched.unionByName(padded.select(matched.columns.map(col).toIndexedSeq: _*))
   }
 
   private def indexedBroadcastEnabled: Boolean =

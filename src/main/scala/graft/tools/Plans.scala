@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dump formatted physical plans for headline queries — the .explain audit
-  * for pushdown / broadcast / codegen / shuffle count. Run:
-  * `sbt "runMain graft.tools.Plans [query ...]"`.
+/** Dump formatted physical plans — the .explain audit for pushdown /
+  * broadcast / codegen / shuffle count. Without arguments it dumps the
+  * spatial-join family. Run: `sbt "runMain graft.tools.Plans [query ...]"`.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -21,9 +21,15 @@ object Plans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.sql.functions.install(spark)
+    // one SPARK_GRAFT_PLAN_OUT run per commit diffs every DataFrame
+    // spatial-join plan
     val names = if (args.nonEmpty) args.toSeq
-      else Seq("g01_bbox_filter", "q01_pricing_summary", "g03_sjoin_pip",
-        "g15_sjoin_grid", "t05_minhash_pairs", "e01_cosine_topk", "q02_revenue_by_nation")
+      else Seq("g03_sjoin_pip", "g15_sjoin_grid", "g17_overlay", "g37_dwithin_join",
+        "g40_sjoin_nearest", "g48_sjoin_left", "g68_sjoin_nearest_left",
+        "g70_sjoin_nearest_expand", "g72_sjoin_on_attribute", "g74_sjoin_nearest_bcast",
+        "g76_sjoin_knn", "g77_sjoin_knn_expand", "g87_sjoin_left_grid",
+        "g90_sjoin_dwithin_sphere", "g91_sjoin_nearest_sphere", "g102_cluster_within",
+        "g110_sjoin_hotcell")
     // SPARK_GRAFT_PLAN_OUT=<dir>,<suffix>: write one
     // <dir>/<query>_<suffix>.txt per query in FORMATTED mode (the r18
     // optimization-round plan artifacts) instead of stdout SimpleMode.

@@ -261,6 +261,50 @@ class IndexedSjoinSpec extends AnyFunSuite {
     val gn = lu.sjoinNearest(ru, "lid", maxDistance = 30.0, cellSize = 30.0)
     assert(gn.columns.count(_ == "_cand_n") == 1)
     assert(gn.filter(col("_cand_n") =!= col("lid") + 7).count() == 0)
+
+    // grid and sphere joins: user columns named like the cell, rank and
+    // row-id scratch columns keep their values (the right side's `_cell`
+    // clashes with the left's, so it comes back suffixed) — null-safe, so
+    // null-padded outer rows must carry their own side's values too
+    def withUserCols(l: GeoDataFrame, r: GeoDataFrame): (GeoDataFrame, GeoDataFrame) =
+      (l.copy(df = l.df.withColumn("_cell", col("lid") * 2)
+        .withColumn("_rk", col("lid") + 3).withColumn("_sjoin_row_id", col("lid") + 7)),
+        r.copy(df = r.df.withColumn("_cell", col("rid") * 3)))
+    def userColsIntact(out: DataFrame): Unit = {
+      for (c <- Seq("_cell", "_rk", "_sjoin_row_id", "_cell_right"))
+        assert(out.columns.count(_ == c) == 1, s"$c in ${out.columns.mkString(",")}")
+      assert(out.filter(!(col("_cell") <=> col("lid") * 2) ||
+        !(col("_rk") <=> col("lid") + 3) || !(col("_sjoin_row_id") <=> col("lid") + 7) ||
+        !(col("_cell_right") <=> col("rid") * 3)).count() == 0)
+    }
+    val gl = GeoDataFrame(leftG.df.filter(col("lid") < 100).select(col("lid"), col("geometry")))
+    val gr = GeoDataFrame(rightG.df.select(col("rid"), col("geometry")))
+    val (glu, gru) = withUserCols(gl, gr)
+    for (how <- Seq("inner", "left", "right")) {
+      val gj = glu.sjoin(gru, strategy = "grid", cellSize = Some(10.0), how = how)
+      val want = pairs(gl.sjoin(gr, strategy = "grid", cellSize = Some(10.0), how = how))
+      assert(pairs(gj) == want && want.nonEmpty, s"how=$how")
+      userColsIntact(gj)
+    }
+    // lon/lat points around 60N; lid 99 has no right point within reach
+    def lonLat(key: String, pts: Seq[(Long, Double, Double)]): GeoDataFrame =
+      GeoDataFrame.fromWkt(pts.map { case (i, x, y) => (i, s"POINT ($x $y)") }
+        .toDF(key, "wkt"), "wkt")
+    val sl = lonLat("lid", (0 until 20).map(i =>
+      (i.toLong, -10.0 + (i % 5) * 0.3, 60.0 + (i / 5) * 0.3)) :+ ((99L, 50.0, 10.0)))
+    val sr = lonLat("rid", (0 until 12).map(i =>
+      (100L + i, -9.9 + (i % 4) * 0.4, 60.1 + (i / 4) * 0.4)))
+    val (slu, sru) = withUserCols(sl, sr)
+    val dj = slu.sjoinDwithinSphere(sru, 30000.0).df
+    val dwant = pairs(sl.sjoinDwithinSphere(sr, 30000.0).df)
+    assert(pairs(dj) == dwant && dwant.nonEmpty)
+    userColsIntact(dj)
+    for (how <- Seq("inner", "left")) {
+      val nj = slu.sjoinNearestSphere(sru, "lid", 30000.0, how = how)
+      assert(pairs(nj) == pairs(sl.sjoinNearestSphere(sr, "lid", 30000.0, how = how)))
+      if (how == "left") assert(pairs(nj).contains((99L, null)))
+      userColsIntact(nj)
+    }
   }
 
   test("indexed plan is a BroadcastHashJoin (no nested loop)") {
