@@ -182,13 +182,19 @@ object SparkEntry {
       // is set, dump the run's StreamingQueryProgress JSON (batch
       // durations, stateOperators rows/memory) per sink so streaming
       // claims are auditable the way batch explain() plans are. Env
-      // lookup only when unset — no bench-path overhead.
+      // lookup only when unset — no bench-path overhead. Spark keeps only
+      // the last spark.sql.streaming.numRecentProgressUpdates entries, so
+      // the dump records that cap beside the count it got: equal means the
+      // oldest batches may have been dropped.
       sys.env.get("SPARK_GRAFT_STREAM_PROGRESS_DIR").foreach { dir =>
         try {
           val d = java.nio.file.Paths.get(dir)
           java.nio.file.Files.createDirectories(d)
           val name = Option(q.name).getOrElse(q.id.toString)
-          val body = q.recentProgress.map(_.json).mkString("[\n", ",\n", "\n]\n")
+          val progress = q.recentProgress
+          val cap = s.sessionState.conf.streamingProgressRetention
+          val body = s"""{"recentProgress":${progress.length},"numRecentProgressUpdates":$cap,""" +
+            progress.map(_.json).mkString("\"progress\":[\n", ",\n", "\n]}\n")
           java.nio.file.Files.write(d.resolve(s"$name.progress.json"),
             body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         } catch { case _: Throwable => () }
