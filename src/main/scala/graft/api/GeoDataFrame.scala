@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.geom.{Envelope, Geometry, GeometryCollection, Polygon, Wkb}
+import graft.ops.Iterate
 import graft.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -1219,10 +1220,12 @@ final case class GeoDataFrame(
     * matching the method's total-coverage contract).
     *
     * 100 TB shape: each round is one grid equi-join + one rank exchange
-    * over the shrinking unmatched set; the remainder is localCheckpoint'd
-    * per round so the anti-join lineage doesn't stack. Pick seedDistance
-    * near the typical nearest-neighbor spacing: most rows match in round
-    * 0 and the tail rounds carry only outliers.
+    * over the shrinking unmatched set; the rounds run on
+    * [[graft.ops.Iterate.fixpoint]] and the remainder is pinned
+    * ([[graft.ops.Iterate.pin]]) per round so the anti-join lineage
+    * doesn't stack. Pick seedDistance near the typical nearest-neighbor
+    * spacing: most rows match in round 0 and the tail rounds carry only
+    * outliers.
     */
   def sjoinNearestExpanding(
       right: GeoDataFrame,
@@ -1242,51 +1245,42 @@ final case class GeoDataFrame(
       k: Int = 1,
       // observability hook for scale soaks (null = zero overhead): called
       // after each round with (round, REMAINING unmatched left rows) — the
-      // localCheckpoint-pinned frame, so a probe's count() and plan
-      // inspection are cheap and do not re-run the round
+      // pinned frame, so a probe's count() and plan inspection are cheap
+      // and do not re-run the round
       roundProbe: (Int, DataFrame) => Unit = null): DataFrame = {
     require(seedDistance > 0, "sjoinNearestExpanding requires a positive seedDistance")
     require(k >= 1, "sjoinNearestExpanding requires k >= 1")
-    var remaining = this
-    var out: Option[DataFrame] = None
-    var dist = seedDistance
-    var cell = cellSize
-    var round = 0
-    var done = false
-    while (round <= maxRounds && !done) {
+    // state: (unmatched left rows, matched rows so far, radius, cell size)
+    val init = (this, Option.empty[DataFrame], seedDistance, cellSize)
+    val ((_, out, _, _), _) = Iterate.fixpoint(init, maxRounds + 1) {
+      case (_, _, dist, _) =>
+        s"sjoinNearestExpanding: rows still incomplete after $maxRounds doublings " +
+          s"(radius ${dist / 2}) — fewer than k=$k right rows in their region? " +
+          "Raise seedDistance/maxRounds"
+    } { case ((remaining, out, dist, cell), round) =>
       // pin the round's join+window output ONCE (r19): the matched rows
-      // feed the final union and the anti-join probe — without the
-      // checkpoint the expensive grid join + rank window re-executed at
-      // result time for EVERY round (the whole loop ran twice). Both
-      // checkpoints are LAZY and the single rest.count() below
-      // materializes the chain — one control job per round instead of
-      // three (eager-ckpt + eager-ckpt + isEmpty), since the anti-join's
-      // probe scan pins `cands` as a side effect.
+      // feed the final union and the anti-join probe — without the pin
+      // the expensive grid join + rank window re-executed at result time
+      // for EVERY round (the whole loop ran twice). The single
+      // rest.count() below materializes both pins — one control job per
+      // round, since the anti-join's probe scan pins `cands` as a side
+      // effect.
       val (cands0, candCol) = remaining.sjoinNearestImpl(right, leftKey, dist, cell,
         rsuffix, distanceCol, how = "inner", exclusive = exclusive, k = k)
-      val cands = cands0.localCheckpoint(eager = false)
-      val matched = cands.filter(col(candCol) >= k).drop(candCol)
+      val matched = Iterate.pin(cands0).filter(col(candCol) >= k).drop(candCol)
       // no distinct() on the probe side: left_anti ignores key multiplicity,
       // and dropping it removes one aggregate exchange per round
-      val rest = remaining.df
-        .join(matched.select(col(leftKey)), Seq(leftKey), "left_anti")
-        .localCheckpoint(eager = false) // pin: cuts the stacked anti-join
-                                        // lineage, materialized by count()
+      val rest = Iterate.pin(remaining.df
+        .join(matched.select(col(leftKey)), Seq(leftKey), "left_anti"))
       val restCnt = rest.count()
-      out = Some(out.map(_.unionByName(matched)).getOrElse(matched))
+      val all = Some(out.map(_.unionByName(matched)).getOrElse(matched))
       if (roundProbe != null) roundProbe(round, rest)
-      if (restCnt == 0L) done = true
-      else {
-        remaining = remaining.copy(df = rest, spatialPartitions = None,
-          pointSource = None, fileSource = None, boxSource = None,
-          coveringSource = None, spatialPartitionHulls = None)
-        dist *= 2; cell *= 2; round += 1
-      }
+      if (restCnt == 0L) ((remaining, all, dist, cell), true)
+      else ((remaining.copy(df = rest, spatialPartitions = None,
+        pointSource = None, fileSource = None, boxSource = None,
+        coveringSource = None, spatialPartitionHulls = None),
+        all, dist * 2, cell * 2), false)
     }
-    if (!done) throw new IllegalStateException(
-      s"sjoinNearestExpanding: rows still incomplete after $maxRounds doublings " +
-        s"(radius ${dist / 2}) — fewer than k=$k right rows in their region? " +
-        "Raise seedDistance/maxRounds")
     out.get
   }
 

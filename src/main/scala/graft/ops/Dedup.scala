@@ -1057,16 +1057,13 @@ object Dedup {
     * basins per round: O(log diameter) rounds measured (9 for a permuted
     * path of diameter 10^4), each a constant number of shuffles.
     *
-    * Rounds are checkpointed with CAPPED size stats
-    * ([[org.apache.spark.sql.GraftInterop.localCheckpointCappedStats]]) —
-    * Spark 4 carries pre-checkpoint plan stats onto the LogicalRDD leaf
-    * and size-only join estimation multiplies them, so an iterative loop
-    * otherwise grows a doubly-exponential BigInt that stalls the DRIVER in
-    * ToomCook multiplies by ~round 12. Convergence is witnessed by the
-    * label sum (labels only ever decrease, so an unchanged sum means no
-    * label moved); exhausting `maxIter` without convergence THROWS rather
-    * than returning wrong labels. The fixpoint (component minimum) is
-    * unique, so the result is deterministic regardless of schedule.
+    * The outer rounds and the inner collapse run on [[Iterate.fixpoint]]
+    * and pin every frame with [[Iterate.pin]]. Convergence is witnessed
+    * by the label sum (labels only ever decrease, so an unchanged sum
+    * means no label moved); exhausting `maxIter` without convergence
+    * THROWS rather than returning wrong labels. The fixpoint (component
+    * minimum) is unique, so the result is deterministic regardless of
+    * schedule.
     */
   def connectedComponents(
       pairs: DataFrame,
@@ -1087,15 +1084,14 @@ object Dedup {
     // mirror each pair in ONE pass with an explode (r19): the old
     // checkpoint-then-union form cost two eager materialization jobs per
     // call; the explode reads the (possibly expensive) pair plan once by
-    // construction, and the count() below materializes the lazy checkpoint
-    val edges = pairs
+    // construction, and the count() below materializes the pin
+    val edges = Iterate.pin(pairs
       .select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))
       .select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
       .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct())
     // Size-adaptive local solve: after dedup the label graph is usually
     // orders of magnitude smaller than the corpus it came from (pairs are
     // (long,long) only, and upstream generators are structurally bounded
@@ -1140,16 +1136,14 @@ object Dedup {
       return (out, 0)
     }
     // seed labels with the first hop already applied: label = min(self, neighbors)
-    // capped-stats checkpoints: the loop below would otherwise compound
-    // size-only join estimates doubly-exponentially across rounds (Spark 4
-    // carries the pre-checkpoint plan's stats onto the LogicalRDD leaf) —
-    // a diameter-10^4 soak stalled the DRIVER in BigInteger multiplies by
-    // round ~12. See GraftInterop.localCheckpointCappedStats.
-    var labels = org.apache.spark.sql.GraftInterop.localCheckpointCappedStats(
-      edges.groupBy(col("src"))
-        .agg(min(col("dst")).as("_mn"))
-        .select(col("src").as("node"), least(col("src"), col("_mn")).as("label")))
-    var prevSum = labels.agg(sum(col("label"))).head().getLong(0)
+    val seed = Iterate.pin(edges.groupBy(col("src"))
+      .agg(min(col("dst")).as("_mn"))
+      .select(col("src").as("node"), least(col("src"), col("_mn")).as("label")))
+    // the convergence witness, and the one action that materializes each
+    // pin. Summed as decimal(38,0): a Long sum of 64-bit ids (hashed doc
+    // ids) overflows, which ANSI mode turns into an ARITHMETIC_OVERFLOW.
+    def labelSum(ls: DataFrame): java.math.BigDecimal =
+      ls.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
     // one pointer jump: label := min(label, label-of-label). The label map
     // is a functional graph pointing at strictly smaller ids, i.e. a forest
     // rooted at local minima — jumping walks toward the root.
@@ -1158,53 +1152,42 @@ object Dedup {
         col("x.label") === col("_ln"), "left")
       .select(col("x.node").as("node"),
         least(col("x.label"), coalesce(col("_ll"), col("x.label"))).as("label"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // hop: pull the min label across physical edges
-      val prop = edges.join(labels.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(min(col("label")).as("_nlabel"))
-      val hop = labels.join(prop, Seq("node"), "left")
-        .select(col("node"), col("label").as("_old"),
-          least(col("label"), coalesce(col("_nlabel"), col("label"))).as("_m"))
-      // basin reduce (star contraction): every node reports its hop min to
-      // its CURRENT root (groupBy old label), and the whole basin adopts
-      // the basin-wide min. Without this the root never learns what the
-      // basin BOUNDARY discovered and the smaller label seeps in one
-      // physical hop per round — the r12 diameter-10^4 soak measured only
-      // ~1.2x contraction per round and hit maxIter with wrong labels.
-      // With it each basin acts as a super-node, so the contracted
-      // basin graph loses a constant fraction of its basins per round:
-      // true O(log diameter) outer rounds (9 measured for diameter 10^4).
-      val basin = hop.groupBy(col("_old").as("_r")).agg(min(col("_m")).as("_bmin"))
-      val merged = hop.join(basin, col("_old") === col("_r"))
-        .select(col("node"), least(col("_m"), col("_bmin")).as("label"))
-      // collapse: pointer-jump label chains to their roots (inner fixpoint;
-      // each jump squares the chain depth it spans, so this is O(log
-      // chain-depth) cheap label-only joins)
-      var cur = org.apache.spark.sql.GraftInterop.localCheckpointCappedStats(
-        merged)
-      var curSum = cur.agg(sum(col("label"))).head().getLong(0)
-      var collapsed = false
-      while (!collapsed) {
-        val j = org.apache.spark.sql.GraftInterop.localCheckpointCappedStats(
-          jump(cur))
-        val js = j.agg(sum(col("label"))).head().getLong(0)
-        collapsed = js == curSum
-        curSum = js
-        cur = j
-      }
-      converged = curSum == prevSum
-      prevSum = curSum
-      labels = cur
-      i += 1
+    val ((labels, _), rounds) = Iterate.fixpoint((seed, labelSum(seed)), maxIter)(_ =>
+      s"connectedComponents: not converged after $maxIter rounds — raise " +
+        "maxIter (labels at this point would be WRONG, not approximate)") {
+      case ((labels, prevSum), _) =>
+        // hop: pull the min label across physical edges
+        val prop = edges.join(labels.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst").as("node"))
+          .agg(min(col("label")).as("_nlabel"))
+        val hop = labels.join(prop, Seq("node"), "left")
+          .select(col("node"), col("label").as("_old"),
+            least(col("label"), coalesce(col("_nlabel"), col("label"))).as("_m"))
+        // basin reduce (star contraction): every node reports its hop min to
+        // its CURRENT root (groupBy old label), and the whole basin adopts
+        // the basin-wide min. Without this the root never learns what the
+        // basin BOUNDARY discovered and the smaller label seeps in one
+        // physical hop per round — the r12 diameter-10^4 soak measured only
+        // ~1.2x contraction per round and hit maxIter with wrong labels.
+        // With it each basin acts as a super-node, so the contracted
+        // basin graph loses a constant fraction of its basins per round:
+        // true O(log diameter) outer rounds (9 measured for diameter 10^4).
+        val basin = hop.groupBy(col("_old").as("_r")).agg(min(col("_m")).as("_bmin"))
+        val merged = Iterate.pin(hop.join(basin, col("_old") === col("_r"))
+          .select(col("node"), least(col("_m"), col("_bmin")).as("label")))
+        // collapse: pointer-jump label chains to their roots. Each jump
+        // doubles the chain span it covers, so 64 jumps flatten any chain
+        // of 64-bit ids; the cap only fires if that invariant breaks.
+        val (collapsed, _) = Iterate.fixpoint((merged, labelSum(merged)), 64)(_ =>
+          "connectedComponents: label chains not collapsed after 64 pointer jumps") {
+          case ((cur, curSum), _) =>
+            val j = Iterate.pin(jump(cur))
+            val js = labelSum(j)
+            ((j, js), js == curSum)
+        }
+        (collapsed, collapsed._2 == prevSum)
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents: not converged after $maxIter rounds — raise " +
-          "maxIter (labels at this point would be WRONG, not approximate)")
-    (labels.select(col("node").as("doc_id"), col("label").as("cluster_id")), i)
+    (labels.select(col("node").as("doc_id"), col("label").as("cluster_id")), rounds)
   }
 
   /** Exact SUBSTRING (span-level) duplication: find maximal token spans

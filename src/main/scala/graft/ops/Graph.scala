@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftInterop}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Link-graph operators for crawl curation: PageRank-family centrality is
@@ -26,12 +26,11 @@ object Graph {
     * the narrow (node, rank) table onto the edge list keyed by source
     * and one hash aggregation keyed by destination — both shuffles carry
     * only (long, double) rows, never page content. The node list,
-    * out-degrees, and contribution edges are pinned ONCE with
-    * localCheckpoint (otherwise every iteration re-executes the caller's
-    * edge derivation), and the rank table is localCheckpoint'ed each
-    * round with capped stats (the CC lesson: checkpoint plan stats
-    * otherwise compound across rounds). Dangling mass is one 1-row
-    * aggregate broadcast per iteration.
+    * out-degrees, and contribution edges are pinned ONCE (otherwise every
+    * iteration re-executes the caller's edge derivation), and the rank
+    * table is pinned each round ([[Iterate.pin]], on the
+    * [[Iterate.fixpoint]] driver). Dangling mass is one 1-row aggregate
+    * collected per iteration: the round's one control action.
     */
   def pageRank(
       edges: DataFrame,
@@ -47,16 +46,16 @@ object Graph {
     // table: nodes/outDeg/contrib each read the cheap checkpoint instead
     // of re-running the upstream plan, and contrib is pinned again
     // because every iteration joins against it
-    val e = GraftInterop.localCheckpointCappedStats(
+    val e = Iterate.pin(
       edges.select(col(srcCol).cast("long").as("_src"),
-        col(dstCol).cast("long").as("_dst")))
-    val nodes = GraftInterop.localCheckpointCappedStats(
+        col(dstCol).cast("long").as("_dst")), eager = true)
+    val nodes = Iterate.pin(
       e.select(col("_src").as("_id"))
         .union(e.select(col("_dst").as("_id"))).distinct())
-    val outDeg = GraftInterop.localCheckpointCappedStats(
+    val outDeg = Iterate.pin(
       e.groupBy(col("_src")).agg(count(lit(1)).as("_deg")))
     // contribution edges: src, dst, 1/outdeg(src)
-    val contrib = GraftInterop.localCheckpointCappedStats(
+    val contrib = Iterate.pin(
       e.join(outDeg, "_src")
         .select(col("_src"), col("_dst"),
           (lit(1.0) / col("_deg").cast("double")).as("_w")))
@@ -68,10 +67,9 @@ object Graph {
     // literal (it must be evaluated once per iteration either way; the
     // broadcast form paid an extra exchange around the same job).
     val n: Double = nodes.count().toDouble
-    var ranks = GraftInterop.localCheckpointCappedStats(
-      nodes.select(col("_id"), (lit(1.0) / lit(n)).as("_r")))
-    var i = 0
-    while (i < iters) {
+    val init = Iterate.pin(nodes.select(col("_id"), (lit(1.0) / lit(n)).as("_r")))
+    val (ranks, _) = Iterate.fixpoint(init, iters)(_ =>
+      s"pageRank: $iters iterations did not finish") { (ranks, i) =>
       val dm: Double = ranks.join(outDeg,
           ranks("_id") === outDeg("_src"), "left_anti")
         .agg(coalesce(sum(col("_r")), lit(0.0)).as("_dm"))
@@ -80,13 +78,12 @@ object Graph {
         .join(ranks, contrib("_src") === ranks("_id"))
         .groupBy(col("_dst"))
         .agg(sum(col("_r") * col("_w")).as("_in"))
-      ranks = GraftInterop.localCheckpointCappedStats(
+      (Iterate.pin(
         nodes.join(inflow, nodes("_id") === inflow("_dst"), "left")
           .select(col("_id"),
             (lit(1.0 - damping) / lit(n)
               + lit(damping) * coalesce(col("_in"), lit(0.0))
-              + lit(damping) * lit(dm) / lit(n)).as("_r")))
-      i += 1
+              + lit(damping) * lit(dm) / lit(n)).as("_r"))), i == iters - 1)
     }
     ranks.select(col("_id").as(srcCol + "_node"), col("_r").as("pagerank"))
   }
@@ -105,7 +102,8 @@ object Graph {
     * Scale shape: per iteration one equi-join of the (node,label) longs
     * onto the pinned undirected edge list and two hash aggs — all rows
     * are (long,long[,long]); content never shuffles; the label table is
-    * localCheckpoint'ed per round with capped stats (the CC lesson).
+    * pinned per round ([[Iterate.pin]], on the [[Iterate.fixpoint]]
+    * driver).
     *
     * Returns (node, label). Nodes = distinct edge endpoints (an edge
     * list has no isolated nodes; left-join the result onto your node
@@ -122,11 +120,10 @@ object Graph {
     // LAZILY from that pinned table — each is a narrow map/union over an
     // in-memory RDD, so re-reading it per iteration is cheaper than the
     // per-view checkpoint jobs were (r18: three upfront checkpoint jobs
-    // dominated the wall of small-iteration runs; each eager
-    // localCheckpoint is a full job of fixed scheduling cost).
-    val raw = GraftInterop.localCheckpointCappedStats(
+    // dominated the wall of small-iteration runs).
+    val raw = Iterate.pin(
       edges.select(col(srcCol).cast("long").as("_a"),
-        col(dstCol).cast("long").as("_b")))
+        col(dstCol).cast("long").as("_b")), eager = true)
     // self-loops contribute no propagation but their endpoints ARE nodes
     // (the contract: nodes = distinct edge endpoints) — derive the node
     // set BEFORE dropping them, or a node appearing only in self-loops
@@ -135,19 +132,18 @@ object Graph {
     val und = e.unionByName(e.select(col("_b").as("_a"), col("_a").as("_b")))
     val nodes = raw.select(col("_a").as("_id"))
       .unionByName(raw.select(col("_b").as("_id"))).distinct()
-    var lab = nodes.select(col("_id"), col("_id").as("_lbl"))
-    var i = 0
-    while (i < iters) {
+    val init = nodes.select(col("_id"), col("_id").as("_lbl"))
+    val (lab, _) = Iterate.fixpoint(init, iters)(_ =>
+      s"labelPropagation: $iters iterations did not finish") { (lab, i) =>
       val counted = und
         .join(lab.select(col("_id").as("_b"), col("_lbl").as("_nl")), Seq("_b"))
         .groupBy(col("_a"), col("_nl"))
         .agg(count(lit(1)).as("_c"))
       // argmax by (count desc, label asc) as a min over struct(-count, label)
-      lab = GraftInterop.localCheckpointCappedStats(
+      (Iterate.pin(
         counted.groupBy(col("_a"))
           .agg(min(struct((-col("_c")).as("nc"), col("_nl").as("l"))).as("_m"))
-          .select(col("_a").as("_id"), col("_m.l").as("_lbl")))
-      i += 1
+          .select(col("_a").as("_id"), col("_m.l").as("_lbl"))), i == iters - 1)
     }
     lab.select(col("_id").as("node"), col("_lbl").as("label"))
   }

@@ -13,26 +13,18 @@ object GraftInterop {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** `localCheckpoint` with a bounded size estimate.
+  /** `localCheckpoint` (eager by default) with a bounded size estimate.
     *
-    * Spark 4's `Dataset.localCheckpoint` eagerly carries the ORIGINAL
-    * plan's statistics onto the `LogicalRDD` leaf
-    * (`LogicalRDD.rewriteStatsAndConstraints`). For an iterative algorithm
-    * that checkpoints each round (connected components), round k's plan
-    * joins round k-1's leaves, and size-only join estimation MULTIPLIES
-    * child sizes — so the carried `sizeInBytes` grows doubly-exponentially
-    * in the round count. By ~round 12 the BigInt has ~10^8 bits and each
-    * stats product (ToomCook multiply) stalls the driver for minutes; a
-    * deep-diameter component (log2(10^4) ~ 14 rounds) never finishes.
-    *
-    * This wrapper checkpoints, then rebuilds the `LogicalRDD` leaf with
-    * `sizeInBytes` capped (default 1 TiB — far above every broadcast
-    * threshold, so capping can only DISABLE a broadcast, never wrongly
-    * enable one; row counts and correctness are unaffected).
+    * Spark 4's `Dataset.localCheckpoint` carries the ORIGINAL plan's
+    * statistics onto the `LogicalRDD` leaf
+    * (`LogicalRDD.rewriteStatsAndConstraints`). This wrapper checkpoints,
+    * then rebuilds that leaf with `sizeInBytes` capped (default 1 TiB);
+    * row counts and correctness are unaffected. Why iterative operators
+    * need the cap: [[graft.ops.Iterate.pin]].
     */
   def localCheckpointCappedStats(df: Dataset[Row],
-      capBytes: Long = 1L << 40): DataFrame = {
-    val ck = df.localCheckpoint()
+      capBytes: Long = 1L << 40, eager: Boolean = true): DataFrame = {
+    val ck = df.localCheckpoint(eager)
     ck.queryExecution.logical match {
       case lr: execution.LogicalRDD if lr.computeStats().sizeInBytes > BigInt(capBytes) =>
         val spark = ck.sparkSession.asInstanceOf[classic.SparkSession]

@@ -565,26 +565,33 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(spans3 >= 2)
   }
 
-  test("connectedComponents closes a diameter-10^4 path in O(log d) rounds") {
-    // adversarial fixture: a pure PATH graph (the deepest structure a
-    // dedup pair graph can degenerate to) with PERMUTED node ids, so the
-    // component minimum must propagate end to end — naive min-propagation
-    // needs d rounds, pointer doubling must do it in ~log2(d)
-    val n = 10007 // prime -> i * 48271 % n is a bijection
-    val perm = (i: Int) => (i.toLong * 48271L) % n
-    val edges = (0 until n - 1).map(i => (perm(i), perm(i + 1)))
+  // adversarial fixture: a pure PATH graph (the deepest structure a dedup
+  // pair graph can degenerate to) with PERMUTED node ids, so the component
+  // minimum must propagate end to end — naive min-propagation needs d
+  // rounds, pointer doubling must do it in ~log2(d)
+  private val pathN = 10007 // prime -> i * 48271 % n is a bijection
+  private def permutedPath = {
+    val perm = (i: Int) => (i.toLong * 48271L) % pathN
+    (0 until pathN - 1).map(i => (perm(i), perm(i + 1)))
       .toDF("id_a", "id_b").repartition(4)
-    // force the DISTRIBUTED loop: this test pins the pointer-doubling
-    // contract, so the small-graph local union-find must not short-circuit
+  }
+
+  // forces the DISTRIBUTED loop: these tests pin its contracts, so the
+  // small-graph local union-find must not short-circuit
+  private def distributedCc[T](body: => T): T = {
     val k = "spark.graft.cc.localMaxEdges"
     val before = spark.conf.getOption(k)
     spark.conf.set(k, "0")
-    val (cc, rounds) =
-      try Dedup.connectedComponentsWithRounds(edges)
-      finally before match {
-        case Some(v) => spark.conf.set(k, v)
-        case None    => spark.conf.unset(k)
-      }
+    try body
+    finally before match {
+      case Some(v) => spark.conf.set(k, v)
+      case None    => spark.conf.unset(k)
+    }
+  }
+
+  test("connectedComponents closes a diameter-10^4 path in O(log d) rounds") {
+    val n = pathN
+    val (cc, rounds) = distributedCc(Dedup.connectedComponentsWithRounds(permutedPath))
     val labels = cc.select($"cluster_id").distinct().as[Long].collect()
     assert(labels.toSeq == Seq(0L), s"one component labeled by its min, got ${labels.toSeq}")
     assert(cc.count() == n)
@@ -595,6 +602,26 @@ class PipelineOpsSpec extends AnyFunSuite {
     // be a handful of nodes over an RDD scan, not `rounds` nested joins
     val planNodes = cc.queryExecution.optimizedPlan.collect { case p => p }.size
     assert(planNodes < 10, s"lineage not flat: $planNodes plan nodes")
+  }
+
+  test("connectedComponents: exhausting maxIter on the distributed path throws") {
+    // the diameter-10^4 path needs ~9 outer rounds; two must not return
+    // (partial labels would be wrong, not approximate)
+    val err = intercept[IllegalStateException] {
+      distributedCc(Dedup.connectedComponentsWithRounds(permutedPath, maxIter = 2))
+    }
+    assert(err.getMessage.contains("not converged after 2 rounds"), err.getMessage)
+  }
+
+  test("connectedComponents: ids near Long.MaxValue do not overflow the distributed witness") {
+    // the label sum of three pairs of ~2^62 ids exceeds Long.MaxValue;
+    // under ANSI mode a Long sum throws ARITHMETIC_OVERFLOW
+    val b = Long.MaxValue / 2
+    val pairs = Seq((b + 1, b + 2), (b + 3, b + 4), (b + 5, b + 6)).toDF("id_a", "id_b")
+    val got = distributedCc(
+      Dedup.connectedComponents(pairs).as[(Long, Long)].collect().sorted.toSeq)
+    assert(got == Seq((b + 1, b + 1), (b + 2, b + 1), (b + 3, b + 3),
+      (b + 4, b + 3), (b + 5, b + 5), (b + 6, b + 5)), got.toString)
   }
 
   test("connectedComponents: local union-find short-circuit matches the distributed loop") {
